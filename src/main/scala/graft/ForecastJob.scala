@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   *
   *   - [[forecast]] = PRACTICA3.py main (ref: PRACTICA3.py:179-209):
   *     ventas CSV → rename → clean → per-series forecast kernel →
-  *     results frame (+ optional pandas-compatible CSV sink);
+  *     results frame (+ optional pandas-compatible CSV sink). The sink
+  *     is a directory with one part file per kernel partition (one per
+  *     core); there is deliberately no `coalesce(1)` before it, which
+  *     would fold the kernel back onto a single task;
   *   - [[report]] = generador.py main (ref: generador.py:25-215):
   *     results frame → cleaned + interpretation columns → text render.
   *
@@ -68,11 +71,23 @@ object ForecastJob {
 
   /** The reference's two-script flow in one call: forecast then
     * report over the produced results.
+    *
+    * With a sink (`outCsv`), the forecast plan runs once: the report
+    * and the returned frame are both read back from the written file,
+    * as the generador job reads it, so the frame, the file and the
+    * report agree on every column, `Runtime_sec` included. The lazy
+    * forecast frame would instead rerun the whole plan — scan, kernel
+    * and all — for every action on it, each time with new timings.
+    * Without a sink the returned frame is the lazy forecast frame and
+    * the report is its one pass.
     */
   def run(spark: SparkSession, ventasCsv: String,
       outCsv: Option[String] = None,
       cfg: PipelineConfig = PipelineConfig()): (DataFrame, String) = {
-    val results = forecast(spark, ventasCsv, outCsv, cfg)
+    val forecasted = forecast(spark, ventasCsv, outCsv, cfg)
+    val results = outCsv.fold(forecasted)(path =>
+      spark.read.schema(Schemas.forecastResults).option("header", "true")
+        .csv(path))
     (results, report(results))
   }
 }

@@ -19,6 +19,16 @@ import java.sql.Date
   * units))`, bounded by the calendar, not data volume — feeds a plain
   * `Dataset.flatMap`. No `groupByKey` re-shuffle, no driver
   * materialization, no per-group pickling.
+  *
+  * Kernel width: the collapse shuffle is hash-partitioned on
+  * (sku, store) into `defaultParallelism` partitions — one per core —
+  * rather than sized by bytes. The collapsed rows are small (one
+  * calendar-bounded array per series), so adaptive execution would
+  * coalesce a bytes-sized collapse into a single partition and run
+  * every `processSeries` call on one core, yet the kernel's cost is
+  * per-series model-fit CPU. An explicit-count repartition is never
+  * coalesced, and the collapse aggregate reuses its partitioning, so
+  * the plan keeps the same number of exchanges.
   */
 object Kernel {
 
@@ -140,8 +150,11 @@ object Kernel {
       : Dataset[SkuResult] = {
     val spark = sales.sparkSession
     import spark.implicits._
+    // after the weekly partial-aggregate, so its two-phase combine
+    // and the order of the weekly sums stay as they are
     val weekly = graft.engine.Resample
       .weeklySparse(sales, Seq("sku", "store"), "ts", "units")
+      .repartition(spark.sparkContext.defaultParallelism, $"sku", $"store")
     val perSeries = weekly
       .groupBy($"sku", $"store")
       .agg(sort_array(collect_list(struct($"week", $"units")))

@@ -45,16 +45,25 @@ class GoldenSpec extends AnyFunSuite {
     rows.result()
   }
 
-  test("ForecastJob: ventas CSV in, results CSV + report out (reference main parity)") {
+  /** The fixture as a ventas CSV directory; returns it with a fresh
+    * results path.
+    */
+  private def ventasCsv(): (String, String) = {
     val dir = java.nio.file.Files.createTempDirectory("ventas").toString
     val outCsv = java.nio.file.Files.createTempDirectory("results").toString + "/res"
     ventasRows.toDF("InvoiceNo", "StockCode", "Description",
       "Quantity", "InvoiceDate", "UnitPrice", "CustomerID", "Country")
       .write.mode("overwrite").option("header", "true").csv(dir)
-    val cfg = PipelineConfig(useTrendSeasonal = false,
-      useHoltWinters = false)
+    (dir, outCsv)
+  }
+
+  private val maOnly = PipelineConfig(useTrendSeasonal = false,
+    useHoltWinters = false)
+
+  test("ForecastJob: ventas CSV in, results CSV + report out (reference main parity)") {
+    val (dir, outCsv) = ventasCsv()
     val (results, reportTxt) =
-      ForecastJob.run(spark, dir, Some(outCsv), cfg)
+      ForecastJob.run(spark, dir, Some(outCsv), maOnly)
     assert(results.select("SKU").collect().map(_.getString(0)).sorted
       .toSeq === Seq("DENSE", "GAPPY"))
     // sunk CSV re-enters the report stage like generador.py re-reads
@@ -66,6 +75,24 @@ class GoldenSpec extends AnyFunSuite {
     assert(cleaned.filter(col("Forecast_Weeks") === 4).count() === 2)
     assert(reportTxt.contains("Análisis Detallado de SKU: DENSE"))
     assert(reportTxt.contains("RECOMENDACIÓN CLAVE"))
+  }
+
+  test("ForecastJob.run with a sink scans ventas once; the returned " +
+      "frame is the written file") {
+    val (dir, outCsv) = ventasCsv()
+    val ((results, _), obs) =
+      TestSpark.observe(ForecastJob.run(spark, dir, Some(outCsv), maOnly))
+    def bytes(path: String): Long =
+      new java.io.File(path).listFiles().map(_.length).sum
+    // one pass over ventas for the sink plus one over the results CSV
+    // for the report; a second forecast pass would read ventas again
+    assert(obs.bytesRead <= bytes(dir) + bytes(outCsv),
+      s"read ${obs.bytesRead} B; ventas ${bytes(dir)} B, " +
+        s"results ${bytes(outCsv)} B")
+    val written = spark.read.schema(graft.engine.Schemas.forecastResults)
+      .option("header", "true").csv(outCsv).collect()
+    assert(results.collect().sortBy(_.getString(0)).toSeq ===
+      written.sortBy(_.getString(0)).toSeq)
   }
 
   test("flagship golden: gates, W-SUN edge, MA forecast, inventory") {

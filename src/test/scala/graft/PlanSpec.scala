@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-wide physical-shape guards.
@@ -30,7 +32,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * negative control proves the probe sees a planted whole-group
   * window through the pin.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   private type LPlan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -175,5 +177,29 @@ class PlanSpec extends AnyFunSuite {
           s"$q: window sorts an unfiltered per-group frame")
       }
     }
+  }
+
+  test("Kernel.run runs processSeries on one task per core, with the " +
+      "same two shuffle exchanges") {
+    import spark.implicits._
+    // 8 series of 20 weekly sales each: a collapse shuffle of a few
+    // KB, which adaptive execution would coalesce to one partition
+    val sales = (for (s <- 0 until 8; k <- 0 until 20) yield (s"sku$s",
+      "UK", java.sql.Timestamp.valueOf(
+        java.time.LocalDateTime.of(2024, 1, 7, 10, 0).plusWeeks(k)),
+      10.0 + (s * k) % 7)).toDF("sku", "store", "ts", "units")
+    val ds = graft.engine.forecast.Kernel.run(sales,
+      graft.engine.PipelineConfig(useTrendSeasonal = false,
+        useHoltWinters = false))
+    val (rows, obs) = TestSpark.observe(ds.collect())
+    assert(rows.length === 8)
+    // the result stage is the flatMap over collapsed series
+    assert(obs.stages.maxBy(_.stageId).numTasks ===
+      spark.sparkContext.defaultParallelism)
+    // AdaptiveSparkPlanHelper.collect descends into query stages
+    val exchanges = collect(ds.queryExecution.executedPlan) {
+      case e: ShuffleExchangeLike => e
+    }
+    assert(exchanges.size === 2, ds.queryExecution.executedPlan.toString)
   }
 }

@@ -1,10 +1,14 @@
 package graft
 
 import graft.engine._
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Date
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for DataFrame-level specs. */
 object TestSpark {
@@ -16,6 +20,36 @@ object TestSpark {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
+
+  /** What the Spark work of one block did: its completed stages and
+    * the input bytes its tasks read.
+    */
+  final case class Observed(stages: Seq[StageInfo], bytesRead: Long)
+
+  /** Runs `f` with a listener attached and returns its result with
+    * the stages and input bytes of the jobs it ran. The listener bus
+    * is drained on both sides, so earlier events stay out and every
+    * event of `f` is in.
+    */
+  def observe[A](f: => A): (A, Observed) = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      TestListenerBus.drain(sc)
+      (out, Observed(stages.asScala.toSeq, bytes.get))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** DataFrame-level semantic pins (SURVEY §5.1): W-SUN bucketing incl.
