@@ -574,15 +574,6 @@ object Dedup {
         t -> aggregate(sequence(1, length(t)), 0L,
              (acc, i) -> (acc * 31 + ascii(substring(t, i, 1))) % $P))"""
 
-  /** Token (whitespace-split) polynomial hashes of a text column.
-    * Empty tokens (from consecutive/leading spaces) hash to 0L.
-    * Native ([[PolyHashColumns.tokenHashes]]); the equivalent SQL HOF
-    * `transform(split(text, ' '), t -> fold-per-char)` is what the
-    * DuckDB oracles replay, value-pinned in LlmSpec.
-    */
-  def tokenHashesExpr(text: String): Column =
-    PolyHashColumns.tokenHashes(col(text))
-
   /** Content-token hashes: lowercased, empty tokens dropped — the
     * token form [[decontaminate]] and corpus statistics share. Docs
     * that are empty/whitespace-only yield an empty array. Native
@@ -652,9 +643,8 @@ object Dedup {
     * n-gram with the fitted eval bloom. Entirely ROW-LOCAL — the
     * probe is the native [[BloomMightContainExpr]] inside an EXISTS
     * over the doc's own gram hashes, the filter rides the plan as a
-    * reference object — so it drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.decontamStage]]) or any batch
-    * plan with zero shuffle and zero state. Guarantee vs the exact
+    * reference object — so it applies to a stream as-is or to any
+    * batch plan with zero shuffle and zero state. Guarantee vs the exact
     * [[decontaminate]]: every doc the exact join drops is flagged
     * (no false negatives); an `fpp` fraction of clean docs may
     * over-flag. Zero-token docs are clean (they produce no grams —
@@ -682,8 +672,9 @@ object Dedup {
     * (a span, unlike a [[decontaminate]] gram, has no whole-document
     * fallback — there is no n-token span to dedup). The shared
     * building block of the span-level dedup family below; public
-    * because it is also the stateless streaming front half
-    * ([[graft.streaming.StreamingDedup.spanGramStage]]).
+    * because it is also the stateless streaming front half (applied
+    * to a stream as-is, feeding
+    * [[graft.streaming.StreamingDedup.spanScrubDecisions]]).
     */
   def spanGrams(df: DataFrame, text: String, id: String,
       n: Int = 20, carry: Seq[String] = Nil): DataFrame = df

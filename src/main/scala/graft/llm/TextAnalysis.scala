@@ -15,22 +15,10 @@ object TextAnalysis {
   def tokenCountExpr(text: String): Column =
     expr(s"size(split(trim($text), '\\\\s+'))")
 
-  /** BPE-ish token count: letter runs, digit runs, and single
-    * non-alphanumeric marks (a cheap stand-in for a real subword
-    * tokenizer's piece count).
-    */
-  def bpeishCountExpr(text: String): Column =
-    expr(s"size(regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\\\s]', 0))")
-
   /** Punctuation-ish ratio: non-alphanumeric-non-space chars / chars. */
   def punctRatioExpr(text: String): Column =
     expr(s"""CAST(length(regexp_replace($text, '[a-zA-Z0-9\\\\s]', ''))
              AS DOUBLE) / length($text)""")
-
-  /** Mean token length. */
-  def avgWordLenExpr(text: String): Column =
-    expr(s"""CAST(length(regexp_replace($text, '\\\\s', '')) AS DOUBLE)
-             / size(split(trim($text), '\\\\s+'))""")
 
   /** Language-specific stopword lists (tiny, for the n-gram/stopword
     * heuristic language ID).
@@ -1483,8 +1471,7 @@ object TextAnalysis {
   /** Column-append, ROW-LOCAL form of [[charEntropy]] (same
     * n_bigrams/entropy values to the bit: the per-row fold visits
     * distinct bigrams in the same sorted order as the batch form's
-    * sorted collect) — drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.entropyStage]]) or any plan
+    * sorted collect) — applies to a stream as-is or to any plan
     * with zero shuffle. Same per-row O(distinct×occurrences) trade
     * as [[withDocRepetition]]: right for bounded stream records, use
     * the batch explode form over a corpus.
@@ -1521,10 +1508,9 @@ object TextAnalysis {
   /** Column-append, ROW-LOCAL form of [[docRepetition]]: the same
     * five repetition signals (identical integer ppm values) computed
     * entirely in-row with HOFs, keeping every input column — so it
-    * drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.repetitionStage]]) or any
-    * plan with zero shuffle and zero state. The price of
-    * statelessness is the per-row O(distinct×occurrences) HOF scan
+    * applies to a stream as-is or to any plan with zero shuffle and
+    * zero state. The price of statelessness is the per-row
+    * O(distinct×occurrences) HOF scan
     * the batch form's explode+aggregate deliberately avoids — fine
     * for stream records (bounded docs), wrong for a batch corpus
     * with pathologically long documents; use [[docRepetition]]
@@ -1686,10 +1672,9 @@ object TextAnalysis {
   /** Column-append scoring half of [[dsirWeights]]: the SAME
     * embedding + index-order fold (bit-identical expression types, so
     * scores equal the in-plan fit to the last bit), with the fitted
-    * totals as plan LITERALS — row-local and join-free, so it drops
-    * into a streaming stage
-    * ([[graft.streaming.StreamingDedup.dsirScoreStage]]) or any
-    * batch plan with zero shuffle and zero state. Docs with zero
+    * totals as plan LITERALS — row-local and join-free, so it
+    * applies to a stream as-is or to any batch plan with zero
+    * shuffle and zero state. Docs with zero
     * content tokens are dropped (the model is undefined on them),
     * matching [[dsirWeights]].
     */
@@ -2223,7 +2208,7 @@ object TextAnalysis {
     * SAME frame in ONE driver loop (round 22, guide §1.2/§2.6): the
     * two fits are independent, but each costs one driver-blocking
     * TakeOrdered collect per round — run separately (even overlapped
-    * via [[graft.engine.Pin.concurrently]]) that is 2·rounds jobs of
+    * on two driver threads) that is 2·rounds jobs of
     * scheduler floor, and the seed word-count aggregation scans the
     * corpus twice. Here the word-count frame is computed once and
     * pinned (both grains' vocabularies are row-local projections of
@@ -2635,8 +2620,7 @@ object TextAnalysis {
   /** Column-append form of [[lrQualityGate]]: the same embedding +
     * dot-product chain (bit-identical expressions), keeping EVERY
     * input column and appending `lr_score`/`keep` — join-free and
-    * row-local, so it drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.modelGateStage]]) or any plan
+    * row-local, so it applies to a stream as-is or to any plan
     * that needs the gate alongside the original columns without a
     * doc-id join. Docs with zero content tokens are dropped (the
     * embedding is undefined), matching lrQualityGate.
@@ -3409,8 +3393,8 @@ object TextAnalysis {
     * query terms). The per-term weight is the SAME rational no-libm
     * IEEE tree as [[bm25TopK]] with the fitted (df, n, tot) as plan
     * literals; tf is the row's own token count of the term — no
-    * join, no shuffle, no state, so the stage drops into a stream
-    * ([[graft.streaming.StreamingDedup.bm25ScoreStage]]) unchanged.
+    * join, no shuffle, no state, so it applies to a stream
+    * unchanged.
     */
   def withBm25Score(df: DataFrame, text: String,
       model: Bm25Model): DataFrame = {
@@ -4935,9 +4919,8 @@ object TextAnalysis {
     * from-class erasure count. Running it before fingerprinting /
     * dedup makes an obfuscated duplicate hash onto its clean
     * original — the recall the substitution was designed to destroy.
-    * Row-local inside whole-stage codegen; zero state;
-    * streaming twin [[graft.streaming.StreamingDedup
-    * .confusableStage]].
+    * Row-local inside whole-stage codegen; zero state; applies to
+    * a stream as-is.
     */
   def confusableFold(df: DataFrame, text: String): DataFrame = {
     val clash = Seq("folded_text", "n_folded")

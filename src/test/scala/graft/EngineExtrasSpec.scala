@@ -132,7 +132,7 @@ class EngineExtrasSpec extends AnyFunSuite {
 
   test("partitioned sink prunes partitions on filtered reads") {
     import graft.engine.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("part_out").toString
+    val dir = TestSpark.tempDir("part_out")
     val df = (1 to 300).map(i => (s"store${i % 3}", i.toLong, i * 1.5))
       .toDF("store", "id", "v")
     Ingest.writePartitioned(df, s"$dir/t", Seq("store"))
@@ -164,8 +164,7 @@ class EngineExtrasSpec extends AnyFunSuite {
 
   test("writeSorted: output files cover disjoint key ranges") {
     import graft.engine.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("sorted_out")
-      .toString
+    val dir = TestSpark.tempDir("sorted_out")
     val df = (1 to 10000).map(i => ((i * 37) % 10007, i.toLong))
       .toDF("k", "v")
     Ingest.writeSorted(df, s"$dir/t", numFiles = 4, Seq("k"))
@@ -317,7 +316,7 @@ class EngineExtrasSpec extends AnyFunSuite {
 
   test("writeZOrdered: per-file boxes stay narrow in BOTH dims; single-key sort does not") {
     import graft.engine.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("z_out").toString
+    val dir = TestSpark.tempDir("z_out")
     // uniform 2-D grid of keys
     val df = (0 until 4096).map(i => ((i * 73) % 256L, (i * 149) % 256L))
       .toDF("ka", "kb")
@@ -409,7 +408,7 @@ class EngineExtrasSpec extends AnyFunSuite {
 
   test("compact: shuffle-free rewrite hits the target file count, keeps rows") {
     import graft.engine.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("cpt").toString
+    val dir = TestSpark.tempDir("cpt")
     val df = (1 to 1000).map(i => (i.toLong, s"r$i")).toDF("k", "v")
     df.repartition(32).write.mode("overwrite").parquet(s"$dir/frag")
     def files(p: String) = new java.io.File(p).listFiles()

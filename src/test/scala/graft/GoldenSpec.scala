@@ -49,8 +49,8 @@ class GoldenSpec extends AnyFunSuite {
     * results path.
     */
   private def ventasCsv(): (String, String) = {
-    val dir = java.nio.file.Files.createTempDirectory("ventas").toString
-    val outCsv = java.nio.file.Files.createTempDirectory("results").toString + "/res"
+    val dir = TestSpark.tempDir("ventas")
+    val outCsv = TestSpark.tempDir("results") + "/res"
     ventasRows.toDF("InvoiceNo", "StockCode", "Description",
       "Quantity", "InvoiceDate", "UnitPrice", "CustomerID", "Country")
       .write.mode("overwrite").option("header", "true").csv(dir)

@@ -106,17 +106,34 @@ class RetailSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("Pin.concurrently: returns both results in order and " +
-      "propagates either failure") {
-    val (a, b) = graft.engine.Pin.concurrently(
-      { Thread.sleep(10); 41 }, "x" * 3)
-    assert(a === 41 && b === "xxx")
-    val e = intercept[RuntimeException] {
-      graft.engine.Pin.concurrently(
-        { Thread.sleep(5); 1 },
-        throw new RuntimeException("boom"))
+  test("Pin.parallel returns checkpointed frames in input order") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def checkpointed(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.isCheckpointed
+        case _ => false
+      }
+    val ins = Seq(spark.range(0, 3), spark.range(10, 14),
+      spark.range(20, 22)).map(_.toDF())
+    val outs = graft.engine.Pin.parallel(ins: _*)
+    assert(outs.map(_.as[Long].collect().toSeq) ===
+      Seq(Seq(0L, 1L, 2L), Seq(10L, 11L, 12L, 13L), Seq(20L, 21L)))
+    assert(outs.forall(checkpointed))
+    // the one-frame path pins on the calling thread, same contract
+    val Seq(one) = graft.engine.Pin.parallel(spark.range(5).toDF())
+    assert(checkpointed(one) && one.count() === 5L)
+  }
+
+  test("Pin.parallel rethrows a failing pin's exception on the " +
+      "calling thread") {
+    val bad = spark.range(4)
+      .select(raise_error(concat(lit("pin boom "), col("id"))))
+    // each pin runs on its own thread; the failure must still reach
+    // the caller instead of dying with the pin thread
+    val e = intercept[Exception] {
+      graft.engine.Pin.parallel(spark.range(100).toDF(), bad)
     }
-    assert(e.getMessage === "boom")
+    assert(e.getMessage.contains("pin boom"))
   }
 
   test("abcClassify bands: monotone A->B->C down the revenue ranking") {

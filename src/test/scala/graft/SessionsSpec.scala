@@ -41,8 +41,8 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("streaming session_window equals batch once the watermark closes") {
-    val dir = java.nio.file.Files.createTempDirectory("sess_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sess_ck").toString
+    val dir = TestSpark.tempDir("sess_in")
+    val ckpt = TestSpark.tempDir("sess_ck")
     events(("u", "2024-01-01 00:00:00", 1.0),
       ("u", "2024-01-01 00:10:00", 2.0))
       .write.mode("append").parquet(dir)

@@ -17,9 +17,22 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config("spark.sql.warehouse.dir", tempDir("graft_wh"))
     .getOrCreate()
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+  sys.addShutdownHook(tempDirs.forEach(d =>
+    org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A new empty directory under `java.io.tmpdir`, deleted with
+    * everything in it when the test JVM exits.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir.toString
+  }
 
   /** What the Spark work of one block did: its completed stages and
     * the input bytes its tasks read.
@@ -181,7 +194,7 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("readVentasCsv: explicit schema + timestamp parse (A1)") {
-    val dir = java.nio.file.Files.createTempDirectory("ventas").toString
+    val dir = TestSpark.tempDir("ventas")
     val csv = new java.io.PrintWriter(s"$dir/ventas.csv")
     csv.println("InvoiceNo,StockCode,Description,Quantity,InvoiceDate,UnitPrice,CustomerID,Country")
     csv.println("536365,85123A,HOLDER,6,2010-12-01 08:26:00,2.55,17850,United Kingdom")
@@ -216,7 +229,7 @@ class SparkSpec extends AnyFunSuite {
   }
 
   test("csv roundtrip keeps pandas-style '[a, b]' array format") {
-    val dir = java.nio.file.Files.createTempDirectory("csvrt").toString
+    val dir = TestSpark.tempDir("csvrt")
     val df = Seq(("k1", Seq(1.0, 2.5))).toDF("k", "fc")
     Ingest.writeCsvCompat(df, s"$dir/out")
     val back = spark.read.option("header", "true").csv(s"$dir/out")

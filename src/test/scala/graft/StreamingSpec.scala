@@ -1,11 +1,15 @@
 package graft
 
 import graft.engine.Resample
+import graft.llm.{Dedup, Multimodal, TextAnalysis, UrlOps}
 import graft.streaming.StreamingResample
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Streaming E2 equivalence: the incremental W-SUN weekly aggregation
   * must produce exactly the batch operator's buckets, and the
@@ -28,7 +32,7 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("append").parquet(dir)
 
   test("streaming weekly W-SUN equals the batch resample") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_in").toString
+    val dir = TestSpark.tempDir("stream_in")
     writeBatch(dir,
       ("a", "2024-01-01 09:00:00", 1.0), // Mon -> Sun 01-07
       ("a", "2024-01-07 10:30:00", 2.0), // intraday Sun -> Sun 01-07
@@ -50,8 +54,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("append mode emits closed weeks and drops beyond-watermark lates") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_in2").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val dir = TestSpark.tempDir("stream_in2")
+    val ckpt = TestSpark.tempDir("ckpt")
     writeBatch(dir, ("a", "2024-01-01 00:00:00", 1.0))
     val stream = spark.readStream.schema(schema).parquet(dir)
     val weekly = StreamingResample.weeklyStream(stream, Seq("k"), "ts",
@@ -74,8 +78,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming dedup emits each key once across micro-batches") {
     import graft.streaming.StreamingResample.Keyed
-    val dir = java.nio.file.Files.createTempDirectory("dedup_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_ck").toString
+    val dir = TestSpark.tempDir("dedup_in")
+    val ckpt = TestSpark.tempDir("dedup_ck")
     Seq(Keyed(1L, "a"), Keyed(2L, "b")).toDS()
       .write.mode("append").parquet(dir)
     val stream = spark.readStream
@@ -96,8 +100,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming EWMA equals the batch fold across ordered micro-batches") {
     import graft.streaming.StreamingResample.EwmaEvent
-    val dir = java.nio.file.Files.createTempDirectory("ew_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ew_ck").toString
+    val dir = TestSpark.tempDir("ew_in")
+    val ckpt = TestSpark.tempDir("ew_ck")
     Seq(EwmaEvent("a", 1L, 100.0), EwmaEvent("a", 2L, 200.0),
       EwmaEvent("b", 1L, 50.0)).toDS()
       .write.mode("append").parquet(dir)
@@ -132,8 +136,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming Croston: last emit per key equals the batch fold") {
     import graft.streaming.StreamingResample.CrostonEvent
     val d0 = java.time.LocalDate.of(2024, 1, 7).toEpochDay
-    val dir = java.nio.file.Files.createTempDirectory("cr_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cr_ck").toString
+    val dir = TestSpark.tempDir("cr_in")
+    val ckpt = TestSpark.tempDir("cr_ck")
     Seq(CrostonEvent("a", d0, 10.0), CrostonEvent("a", d0 + 7, 20.0),
       CrostonEvent("b", d0, 5.0)).toDS()
       .write.mode("append").parquet(dir)
@@ -182,8 +186,8 @@ class StreamingSpec extends AnyFunSuite {
     def qty(i: Int): Double =
       if (i == 38) 500.5 else 10.25 + (i % 5) * 1.5
     val all = (1 to 40).map(i => DemandEvent("a", d0 + i, qty(i)))
-    val dir = java.nio.file.Files.createTempDirectory("da_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("da_ck").toString
+    val dir = TestSpark.tempDir("da_in")
+    val ckpt = TestSpark.tempDir("da_ck")
     // coalesce(1): each append must become ONE parquet file — the
     // operator's contract is time-ordered arrival across batches, and
     // a multi-file append races the running trigger (a micro-batch
@@ -237,8 +241,8 @@ class StreamingSpec extends AnyFunSuite {
         .map { case (i, ts, t) => (i, java.sql.Timestamp.valueOf(ts), t) }
         .toDF("doc_id", "ts", "text")
         .write.mode("append").parquet(dir)
-    val dir = java.nio.file.Files.createTempDirectory("cdedup_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cdedup_ck").toString
+    val dir = TestSpark.tempDir("cdedup_in")
+    val ckpt = TestSpark.tempDir("cdedup_ck")
     rows(dir, (1L, "2024-01-01 00:00:00", "same boilerplate"),
       (2L, "2024-01-01 00:05:00", "unique page"))
     val stream = spark.readStream.schema(docSchema).parquet(dir)
@@ -263,87 +267,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamingDedup.dedupByContent(batch, "text", "ts").count() === 2)
   }
 
-  test("streaming span-gram stage equals the batch flow across micro-batches") {
-    import graft.llm.Dedup
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("sg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sg_ck").toString
-    val span = (1 to 25).map(i => s"w$i").mkString(" ")
-    Seq((1L, span)).toDF("doc_id", "text")
-      .write.mode("append").parquet(dir)
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.spanGramStage(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("sg_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    // a later micro-batch carrying the same 25-token span must emit
-    // identical grams (stateless stage: grams depend only on the row)
-    Seq((2L, span + " trailing extras beyond the shared run"))
-      .toDF("doc_id", "text").write.mode("append").parquet(dir)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sg_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val batch = Dedup.spanGrams(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(streamed.toSeq === batch.toSeq)
-    assert(streamed.nonEmpty)
-    // the shared windows collide: doc2's first 6 window grams equal
-    // doc1's (25-token span, 20-token windows)
-    val g1 = streamed.filter(_._1 == 1L).map(t => (t._2, t._3)).toMap
-    val g2 = streamed.filter(_._1 == 2L).map(t => (t._2, t._3)).toMap
-    assert((1L to 6L).forall(ws => g1(ws) == g2(ws)))
-  }
-
-  test("streaming minhash bucket stage equals the batch flow across micro-batches") {
-    import graft.llm.Dedup
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def rows(dir: String, docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    val dir = java.nio.file.Files.createTempDirectory("mh_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mh_ck").toString
-    val d1 = "spark engines shuffle partitions and broadcast small tables"
-    val d2 = "an entirely different document about pasta and tomato sauce"
-    rows(dir, (1L, d1), (2L, d2))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.minhashBuckets(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("mh_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    // a near-duplicate of d1 arriving in a LATER micro-batch must get
-    // the same band keys the batch flow assigns it (stateless stage —
-    // bucket keys depend only on the row)
-    rows(dir, (3L, d1.replace("small", "tiny")))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("mh_out").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    val batch = Dedup.lshBuckets(Dedup.minhashSignatures(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id"),
-      "doc_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    assert(streamed.toSeq === batch.toSeq)
-    assert(streamed.nonEmpty)
-    // docs 1 and 3 (near-dups) must collide on at least one band key;
-    // doc 2 must not collide with either on any band
-    val byBand = streamed.groupBy(_._2)
-    val collide13 = byBand.values.exists(g =>
-      g.filter(x => x._1 == 1L || x._1 == 3L).groupBy(_._3)
-        .values.exists(_.map(_._1).toSet == Set(1L, 3L)))
-    assert(collide13)
-  }
-
   test("stream-stream interval join attributes events inside the window only") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val impSchema = StructType(Seq(
@@ -352,9 +275,9 @@ class StreamingSpec extends AnyFunSuite {
     val clkSchema = StructType(Seq(
       StructField("key", StringType),
       StructField("clk_ts", TimestampType)))
-    val impDir = java.nio.file.Files.createTempDirectory("ij_imp").toString
-    val clkDir = java.nio.file.Files.createTempDirectory("ij_clk").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ij_ck").toString
+    val impDir = TestSpark.tempDir("ij_imp")
+    val clkDir = TestSpark.tempDir("ij_clk")
+    val ckpt = TestSpark.tempDir("ij_ck")
     Seq(("a", ts("2024-01-01 10:00:00")),
       ("b", ts("2024-01-01 10:05:00")))
       .toDF("key", "imp_ts").write.mode("append").parquet(impDir)
@@ -390,8 +313,8 @@ class StreamingSpec extends AnyFunSuite {
       StructField("text", StringType)))
     val corpus = Seq((100L, "already in the corpus"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("sd_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sd_ck").toString
+    val dir = TestSpark.tempDir("sd_in")
+    val ckpt = TestSpark.tempDir("sd_ck")
     Seq((1L, "already in the corpus"), (2L, "fresh doc one"))
       .toDF("doc_id", "text").write.mode("append").parquet(dir)
     val q = StreamingDedup.dedupVsCorpus(
@@ -416,8 +339,8 @@ class StreamingSpec extends AnyFunSuite {
       StructField("units", LongType)))
     val dim = Seq(("s1", "north"), ("s2", "south"))
       .toDF("store", "region")
-    val dir = java.nio.file.Files.createTempDirectory("en_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("en_ck").toString
+    val dir = TestSpark.tempDir("en_in")
+    val ckpt = TestSpark.tempDir("en_ck")
     Seq(("s1", 5L), ("s3", 2L)).toDF("store", "units")
       .write.mode("append").parquet(dir)
     val q = StreamingResample.enrichWithDim(
@@ -447,8 +370,8 @@ class StreamingSpec extends AnyFunSuite {
     def rows(dir: String, docs: (Long, String)*): Unit =
       docs.toSeq.toDF("doc_id", "text")
         .write.mode("append").parquet(dir)
-    val dir = java.nio.file.Files.createTempDirectory("cg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cg_ck").toString
+    val dir = TestSpark.tempDir("cg_in")
+    val ckpt = TestSpark.tempDir("cg_ck")
     val longDoc = ("retail units sold per store and week " * 8).trim +
       " mail me at ops@example.com"
     rows(dir, (1L, longDoc), (2L, "too short to keep"))
@@ -478,387 +401,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.toSeq === batch.toSeq)
   }
 
-  test("streaming model gate equals the batch LR gate; join-free " +
-      "and stateless") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("mg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mg_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region"),
-      (2L, "   "), // zero content tokens -> dropped by the gate
-      (3L, "plainly different vocabulary drives a different score"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.modelGateStage(stream, "text")
-      .writeStream.format("memory").queryName("mg_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((4L, "second micro batch arrives with more retail text"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("mg_out")
-      .select("doc_id", "text", "lr_score", "keep").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-        r.getBoolean(3))).sortBy(_._1)
-    // zero-token doc dropped; original columns ride along
-    assert(streamed.map(_._1).toSeq === Seq(1L, 3L, 4L))
-    // batch parity: identical scores and keep decisions, and the
-    // scores agree with the id-keyed batch gate
-    val batch = StreamingDedup.modelGateStage(
-      spark.read.schema(docSchema).parquet(dir), "text")
-      .select("doc_id", "text", "lr_score", "keep").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-        r.getBoolean(3))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-    val gate = graft.llm.TextAnalysis.lrQualityGate(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(streamed.forall { case (id, _, s, _) => gate(id) == s })
-  }
-
-  test("streaming audio-feature stage equals the batch codec " +
-      "pipelines; row-local and stateless") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("au_in").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week"),
-      (2L, "zz" * 40))
-    for (codec <- Seq("ulaw", "adpcm", "mdct")) {
-      val ckpt = java.nio.file.Files.createTempDirectory(
-        s"au_ck_$codec").toString
-      val stream = spark.readStream.schema(docSchema).parquet(dir)
-      val q = StreamingDedup.audioFeatureStage(stream, "text",
-        "doc_id", codec)
-        .writeStream.format("memory").queryName(s"au_out_$codec")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable()
-      if (codec == "ulaw") rows((3L, "a third doc arrives"))
-      q.processAllAvailable()
-      q.stop()
-      val streamed = spark.table(s"au_out_$codec")
-        .select("doc_id", "sumsq_recon", "max_abs_err",
-          "roundtrip_ok").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))).sortBy(_._1)
-      val batch = StreamingDedup.audioFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        codec)
-        .select("doc_id", "sumsq_recon", "max_abs_err",
-          "roundtrip_ok").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))).sortBy(_._1)
-      assert(streamed.toSeq === batch.toSeq, codec)
-      assert(streamed.forall(_._4), codec)
-    }
-    intercept[IllegalArgumentException] {
-      StreamingDedup.audioFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        "mp3")
-    }
-  }
-
-  test("streaming image-feature stage equals the batch codec " +
-      "pipelines (png lossless, gif frame-sampled)") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("im_in").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region nine"),
-      (2L, "zq" * 400))
-    for (codec <- Seq("png", "gif", "mcv")) {
-      val ckpt = java.nio.file.Files.createTempDirectory(
-        s"im_ck_$codec").toString
-      val stream = spark.readStream.schema(docSchema).parquet(dir)
-      val q = StreamingDedup.imageFeatureStage(stream, "text",
-        "doc_id", codec)
-        .writeStream.format("memory").queryName(s"im_out_$codec")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      val cols = Seq("doc_id", "roundtrip_ok")
-      val streamed = spark.table(s"im_out_$codec")
-        .select(cols.head, cols.tail: _*).collect()
-        .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-      val batch = StreamingDedup.imageFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        codec)
-        .select(cols.head, cols.tail: _*).collect()
-        .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-      assert(streamed.toSeq === batch.toSeq, codec)
-      assert(streamed.map(_._1).toSeq === Seq(1L, 2L), codec)
-      assert(streamed.forall(_._2), codec)
-    }
-    intercept[IllegalArgumentException] {
-      StreamingDedup.imageFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        "webp")
-    }
-  }
-
-  test("streaming patchify stage (flatMap, 4 rows/record) equals the " +
-      "batch pipeline across micro-batches") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("pf_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("pf_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region nine"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.imageFeatureStage(stream, "text", "doc_id",
-        "patchify")
-      .writeStream.format("memory").queryName("pf_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((2L, "zq" * 400))
-    q.processAllAvailable()
-    q.stop()
-    def snap(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "patch_id", "sum_r", "sum_g", "sum_b",
-        "patch_fp", "roundtrip_ok")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6)))
-      .sortBy(t => (t._1, t._2))
-    val streamed = snap(spark.table("pf_out"))
-    val batch = snap(StreamingDedup.imageFeatureStage(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-      "patchify"))
-    assert(streamed.length === 8) // 2 docs x 4 patches
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming augmentation stage equals the batch operator " +
-      "across micro-batches; hash gates make it retry-safe") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("aug_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("aug_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region nine"),
-      (2L, "a b c d e f g h i j k l m n o p"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.augmentStage(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("aug_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "late arrival gets the same deterministic gates"))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "aug_text", "n_aug", "n_dropped")
-    val streamed = spark.table("aug_out")
-      .select(cols.head, cols.tail: _*).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).sortBy(_._1)
-    val batch = graft.llm.TextAnalysis.augmentTokens(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .select(cols.head, cols.tail: _*).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming repetition stage equals the batch signals; " +
-      "row-local and stateless") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("rep_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rep_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "x y\nx y\nz"), (2L, "ab ab ab cd"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.repetitionStage(stream, "text")
-      .writeStream.format("memory").queryName("rep_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "one two\none two\none two"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("rep_out")
-      .select("doc_id", "dup_line_ppm", "top2_ppm").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    // batch parity over the same files
-    val batch = graft.llm.TextAnalysis.docRepetition(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .select("doc_id", "dup_line_ppm", "top2_ppm").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-    // doc 3: 3 lines, 2 duplicated -> 666666 ppm
-    assert(streamed(2)._2 === 666666L)
-  }
-
-  test("streaming decontamination stage equals the batch flag; " +
-      "join-free and stateless") {
-    import graft.streaming.StreamingDedup
-    import graft.llm.Dedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val evalSet = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog tonight"))
-      .toDF("doc_id", "text")
-    val bloom = Dedup.decontamBloom(evalSet, "text")
-    val dir = java.nio.file.Files.createTempDirectory("dc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("dc_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "see the quick brown fox jumps over the lazy dog " +
-      "tonight again"),
-      (2L, "unrelated clean retail content with distinct words"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.decontamStage(stream, "text", bloom)
-      .writeStream.format("memory").queryName("dc_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "second batch also mentions the quick brown fox jumps " +
-      "over the lazy dog tonight"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("dc_out")
-      .select("doc_id", "contaminated").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    assert(streamed.map(_._2).toSeq === Seq(true, false, true))
-    val batch = StreamingDedup.decontamStage(
-      spark.read.schema(docSchema).parquet(dir), "text", bloom)
-      .select("doc_id", "contaminated").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming DSIR score stage equals the batch fit; join-free " +
-      "and stateless") {
-    import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    // fit offline on a labeled reference corpus...
-    val ref = Seq(
-      (101L, "t", "retail units sold per store and week"),
-      (102L, "t", "weekly retail demand by region"),
-      (103L, "r", "entirely unrelated vocabulary here"),
-      (104L, "r", "other raw crawl content words"))
-      .toDF("doc_id", "source", "text")
-    val model = TextAnalysis.dsirFit(ref, "text", "doc_id",
-      "source", "t")
-    // ...then score an UNLABELED live feed with the literal model
-    val dir = java.nio.file.Files.createTempDirectory("ds_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ds_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store"),
-      (2L, "   "), // zero content tokens -> dropped
-      (3L, "unrelated vocabulary here"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.dsirScoreStage(stream, "text", model)
-      .writeStream.format("memory").queryName("ds_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((4L, "second micro batch with more retail units text"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("ds_out")
-      .select("doc_id", "dsir_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 3L, 4L))
-    // batch parity over the same files, same literal model
-    val batch = StreamingDedup.dsirScoreStage(
-      spark.read.schema(docSchema).parquet(dir), "text", model)
-      .select("doc_id", "dsir_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-    // target-typical feed doc outscores the raw-typical one
-    val s = streamed.toMap
-    assert(s(1L) > s(3L))
-  }
-
-  test("streaming BM25 score stage equals the batch apply; " +
-      "join-free and stateless") {
-    import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val ref = Seq(
-      (101L, "alpha alpha beta gamma words"),
-      (102L, "alpha beta beta beta words"),
-      (103L, "gamma delta epsilon zeta words"))
-      .toDF("doc_id", "text")
-    val model = TextAnalysis.bm25Fit(ref, "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bm_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "alpha beta fresh words"), (2L, ""),
-      (3L, "no query terms at all"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.bm25ScoreStage(stream, "text", model)
-      .writeStream.format("memory").queryName("bm_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((4L, "second batch alpha alpha alpha"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("bm_out")
-      .select("doc_id", "bm25_micro", "bm25_hits").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    // stateless stage: every row rides through, empty text included
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L, 4L))
-    val batch = StreamingDedup.bm25ScoreStage(
-      spark.read.schema(docSchema).parquet(dir), "text", model)
-      .select("doc_id", "bm25_micro", "bm25_hits").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-    val s = streamed.map(t => t._1 -> ((t._2, t._3))).toMap
-    assert(s(2L) === ((0L, 0L)) && s(3L) === ((0L, 0L)))
-    assert(s(4L)._1 > s(1L)._1) // tf saturation still orders
-  }
-
   test("streaming tokenizer stage equals the batch BPE apply; " +
       "join-free and stateless") {
     import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType)))
@@ -873,8 +418,8 @@ class StreamingSpec extends AnyFunSuite {
     val merges = TextAnalysis.bpeFitMerges(ref, "text",
       rounds = 3, batch = 2)
     assert(merges.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("tok_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("tok_ck").toString
+    val dir = TestSpark.tempDir("tok_in")
+    val ckpt = TestSpark.tempDir("tok_ck")
     def rows(docs: Seq[(Long, String)]): Unit =
       docs.toDF("doc_id", "text")
         .write.mode("append").parquet(dir)
@@ -912,49 +457,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.filter(_._1 != 3L).toSeq === applied.toSeq)
   }
 
-  test("streaming license gate: stateless verdicts with batch bit " +
-      "parity") {
-    import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val markers = Seq(
-      "mit" -> "permission is hereby granted",
-      "gpl" -> "gnu general public license")
-    val corpus = Seq(
-      (1L, "code under permission is hereby granted terms"),
-      (2L, "plain document, no license"),
-      (3L, "dual permission is hereby granted and " +
-        "gnu general public license"))
-    val dir = java.nio.file.Files.createTempDirectory("lic_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("lic_ck").toString
-    corpus.toDF("doc_id", "text").write.mode("append").parquet(dir)
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.licenseScanStage(stream, "text", "doc_id",
-        markers)
-      .writeStream.format("memory").queryName("lic_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getBoolean(5))
-    val streamed = spark.table("lic_out").collect().map(tup)
-      .sortBy(_._1)
-    assert(streamed.map(t => (t._1, t._2, t._6)).toSeq === Seq(
-      (1L, "mit", false), (2L, "unknown", false), (3L, "gpl", true)))
-    val batch = TextAnalysis.licenseScan(
-        corpus.toDF("doc_id", "text"), "text", "doc_id", markers)
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
   test("streaming release gate: the three row-local verdicts match " +
       "the batch operator; bloom contamination never under-flags") {
     import graft.streaming.StreamingDedup
-    import graft.llm.Dedup
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType)))
@@ -970,8 +475,8 @@ class StreamingSpec extends AnyFunSuite {
       (3L, decon))                                  // contaminated
     val ev = Seq((100L, decon)).toDF("doc_id", "text")
     val bloom = Dedup.decontamBloom(ev, "text")
-    val dir = java.nio.file.Files.createTempDirectory("rg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rg_ck").toString
+    val dir = TestSpark.tempDir("rg_in")
+    val ckpt = TestSpark.tempDir("rg_ck")
     corpus.toDF("doc_id", "text").write.mode("append").parquet(dir)
     val stream = spark.readStream.schema(docSchema).parquet(dir)
     val q = StreamingDedup.releaseGateStage(stream, "text", "doc_id",
@@ -1015,7 +520,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming byte-level tokenizer: batch parity and live byte " +
       "fallback on out-of-fit scripts") {
     import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType)))
@@ -1030,8 +534,8 @@ class StreamingSpec extends AnyFunSuite {
     // multibyte doc — the fallback case a live multilingual feed
     // actually hits
     val live = fitCorpus ++ Seq((3L, "   "), (4L, "héllo"))
-    val dir = java.nio.file.Files.createTempDirectory("tb_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("tb_ck").toString
+    val dir = TestSpark.tempDir("tb_in")
+    val ckpt = TestSpark.tempDir("tb_ck")
     fitCorpus.toDF("doc_id", "text").write.mode("append").parquet(dir)
     val stream = spark.readStream.schema(docSchema).parquet(dir)
     val q = StreamingDedup.tokenizerBytesStage(stream, "text", merges)
@@ -1064,7 +568,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming mixture accounting equals the batch windowed " +
       "token sums") {
     import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("source", StringType),
@@ -1080,8 +583,8 @@ class StreamingSpec extends AnyFunSuite {
     val ref = corpus.toDF("doc_id", "source", "ts", "text")
     val merges = TextAnalysis.bpeFitMerges(ref, "text",
       rounds = 2, batch = 2)
-    val dir = java.nio.file.Files.createTempDirectory("mx_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mx_ck").toString
+    val dir = TestSpark.tempDir("mx_in")
+    val ckpt = TestSpark.tempDir("mx_ck")
     corpus.take(3).toDF("doc_id", "source", "ts", "text")
       .write.mode("append").parquet(dir)
     val stream = spark.readStream.schema(docSchema).parquet(dir)
@@ -1132,8 +635,8 @@ class StreamingSpec extends AnyFunSuite {
       3L -> ("more unrelated padding text rows", "2024-02-02 00:00:00"),
       4L -> (s5, "2024-02-03 00:00:00"), // far past 1's 10-day TTL
       5L -> (s5, "2024-02-04 00:00:00")) // 1 day after 4: inside TTL
-    val dir = java.nio.file.Files.createTempDirectory("ttl_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ttl_ck").toString
+    val dir = TestSpark.tempDir("ttl_in")
+    val ckpt = TestSpark.tempDir("ttl_ck")
     def write(ids: Long*): Unit =
       ids.map { i => val (t, ts) = docs(i)
         (i, t, java.sql.Timestamp.valueOf(ts)) }
@@ -1168,7 +671,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming minhash candidates: per-bucket star equals the batch " +
       "buckets' star; connectivity matches the batch clique") {
-    import graft.llm.Dedup
     import graft.streaming.StreamingDedup
     val base = ("spark rows shuffle partition codegen catalyst " +
       "tungsten adaptive broadcast join hash aggregate exchange " +
@@ -1181,8 +683,8 @@ class StreamingSpec extends AnyFunSuite {
       5L -> ("totally different corpus of words entirely unlike " +
         "the other family with its own vocabulary repeated " * 4 + "y"),
       6L -> "short singleton document with nothing shared")
-    val dir = java.nio.file.Files.createTempDirectory("mh_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mh_ck").toString
+    val dir = TestSpark.tempDir("mh_in")
+    val ckpt = TestSpark.tempDir("mh_ck")
     def write(ids: Long*): Unit =
       ids.map(i => (i, docs(i))).toDF("doc_id", "text")
         .write.mode("append").parquet(dir)
@@ -1190,8 +692,8 @@ class StreamingSpec extends AnyFunSuite {
       StructField("doc_id", LongType), StructField("text", StringType)))
     write(1L, 4L)
     val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.minhashCandidateStage(
-        StreamingDedup.minhashBuckets(stream, "text", "doc_id"))
+    val q = StreamingDedup.minhashCandidateStage(Dedup.lshBuckets(
+        Dedup.minhashSignatures(stream, "text", "doc_id"), "doc_id"))
       .writeStream.format("memory").queryName("mh_out")
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -1234,7 +736,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming span-scrub: first-occurrence-wins decisions equal " +
       "batch scrubSpans across 3 micro-batches") {
-    import graft.llm.Dedup
     import graft.streaming.StreamingDedup
     // an 8-token span shared by four documents → 4 duplicated 5-token
     // windows per copy; doc 1 is canonical (in-batch doc-id tiebreak
@@ -1247,8 +748,8 @@ class StreamingSpec extends AnyFunSuite {
       3L -> "solo words only here never repeated anywhere at all",
       4L -> s,
       5L -> ("six seven " + s))
-    val dir = java.nio.file.Files.createTempDirectory("span_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("span_ck").toString
+    val dir = TestSpark.tempDir("span_in")
+    val ckpt = TestSpark.tempDir("span_ck")
     def write(ids: Long*): Unit =
       ids.map(i => (i, docs(i))).toDF("doc_id", "text")
         .write.mode("append").parquet(dir)
@@ -1257,7 +758,7 @@ class StreamingSpec extends AnyFunSuite {
     write(1L, 2L)
     val stream = spark.readStream.schema(docSchema).parquet(dir)
     val q = StreamingDedup.spanScrubDecisions(
-        StreamingDedup.spanGramStage(stream, "text", "doc_id", n = 5))
+        Dedup.spanGrams(stream, "text", "doc_id", n = 5))
       .writeStream.format("memory").queryName("span_out")
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -1296,12 +797,11 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming CDC chunk dedup: keep set equals the batch " +
       "first-occurrence rule across micro-batches") {
     import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
     val base = "the quick brown fox jumps over the lazy dog while " +
       "seventeen green bottles hang on the wall and slowly count " +
       "themselves down to none at all in the warm afternoon sun"
-    val dir = java.nio.file.Files.createTempDirectory("cdc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cdc_ck").toString
+    val dir = TestSpark.tempDir("cdc_in")
+    val ckpt = TestSpark.tempDir("cdc_ck")
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     // batch 1: original + an edited near-dup (intra-batch chunk dups)
@@ -1342,7 +842,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming HLL registers merge across micro-batches and the " +
       "final estimate equals the batch sketch to the bit") {
     import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
     val docSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("text", StringType)))
@@ -1350,8 +849,8 @@ class StreamingSpec extends AnyFunSuite {
       (1 to 6).map(i => ("small", s"tiny $i"))
     val batch2 = (700 to 1600).map(i => ("big", s"doc number $i")) ++
       (1 to 40).map(_ => ("small", "tiny 1")) // dups must not inflate
-    val dir = java.nio.file.Files.createTempDirectory("hll_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("hll_ck").toString
+    val dir = TestSpark.tempDir("hll_in")
+    val ckpt = TestSpark.tempDir("hll_ck")
     def write(rows: Seq[(String, String)]): Unit =
       rows.toDF("source", "text").write.mode("append").parquet(dir)
     write(batch1)
@@ -1387,53 +886,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(math.abs(last("big") - 1600.0) / 1600.0 < 0.15)
   }
 
-  test("streaming langId and urlParse stages equal their batch " +
-      "forms; stateless, every row rides through") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("url", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("li_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("li_ck").toString
-    def rows(docs: (Long, String, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text", "url")
-        .write.mode("append").parquet(dir)
-    rows(
-      (1L, "where did you put the keys to the old car",
-        "https://a.b.Example.co.uk:8080/p"),
-      (2L, "los estudiantes estaban leyendo en el jardin",
-        "http://user:pw@www.Site.COM/x"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val staged = StreamingDedup.urlParseStage(
-      StreamingDedup.langIdStage(stream, "text"), "url")
-    val q = staged.writeStream.format("memory").queryName("li_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "les oiseaux chantent dans le jardin", "ftp://10.0.0.1:21/f"))
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
-        r.getBoolean(4), r.getString(5))
-    val cols = Seq("doc_id", "pred_lang", "host", "port", "is_ip",
-      "registered_domain")
-    val streamed = spark.table("li_out")
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.map(t => (t._1, t._2)).toSeq ===
-      Seq((1L, "en"), (2L, "es"), (3L, "fr")))
-    assert(streamed(0)._3 === "a.b.example.co.uk")
-    assert(streamed(0)._4 === 8080L)
-    assert(streamed(0)._6 === "example.co.uk")
-    assert(streamed(2)._5 === true)
-    val batch = StreamingDedup.urlParseStage(
-        StreamingDedup.langIdStage(
-          spark.read.schema(docSchema).parquet(dir), "text"), "url")
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
   test("streaming hybrid retrieval: fitted score stage + stateful " +
       "top-k equals batch hybridRrf once the corpus streams through") {
     import graft.llm.Retrieval
@@ -1460,10 +912,8 @@ class StreamingSpec extends AnyFunSuite {
     // fit the query-side model offline on the same corpus snapshot
     val model = Retrieval.hybridFit(docs, emb, qids)
     assert(model.queries.map(_.query_id) === qids)
-    val dir = java.nio.file.Files
-      .createTempDirectory("hybrid_in").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("hybrid_ckpt").toString
+    val dir = TestSpark.tempDir("hybrid_in")
+    val ckpt = TestSpark.tempDir("hybrid_ckpt")
     val sch = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType),
@@ -1499,93 +949,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(last.toSet === batch)
   }
 
-  test("streaming urlCanon and shard stages equal their batch forms; " +
-      "stateless, two canon variants collide on the stream too") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("url", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("uc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("uc_ck").toString
-    def rows(docs: (Long, String, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text", "url")
-        .write.mode("append").parquet(dir)
-    rows(
-      (1L, "some body text for doc one",
-        "https://WWW.Shop.Com:443/p/1/?utm_source=x&id=1#f"),
-      (2L, "a different and rather longer body text for doc two",
-        "https://www.shop.com/p/1?id=1"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val staged = StreamingDedup.shardStage(
-      StreamingDedup.urlCanonStage(stream, "url"), "text", "doc_id",
-      nShards = 8)
-    val q = staged.writeStream.format("memory").queryName("uc_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "third doc body", "http://other.org:8080/x?b=2&a=1&gclid=g"))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "canon_url", "n_params_dropped", "shard")
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
-    val streamed = spark.table("uc_out")
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    // the two variants of one resource collide on the live feed
-    assert(streamed(0)._2 === "https://www.shop.com/p/1?id=1")
-    assert(streamed(0)._2 === streamed(1)._2)
-    assert(streamed(0)._3 === 1L && streamed(1)._3 === 0L)
-    // non-default port kept, params sorted, tracking key dropped
-    assert(streamed(2)._2 === "http://other.org:8080/x?a=1&b=2")
-    val batch = StreamingDedup.shardStage(
-        StreamingDedup.urlCanonStage(
-          spark.read.schema(docSchema).parquet(dir), "url"),
-        "text", "doc_id", nShards = 8)
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("anchorStage equals batch anchorPairs; stateless, one row " +
-      "per tag") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("an_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("an_ck").toString
-    def rows(texts: String*): Unit =
-      texts.toSeq.toDF("text").write.mode("append").parquet(dir)
-    rows("""x <a href="https://a.b.com/1">First Link</a> y
-           <a href="http://c.co.uk/2">second</a>""")
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.anchorStage(stream, "text")
-      .writeStream.format("memory").queryName("an_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows("""<a href="https://z.b.com/3">first link</a> plain""")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("an_out").collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted
-    // c.co.uk sits under the co.uk multi-part suffix -> the
-    // registrable domain keeps three labels
-    assert(streamed.toSeq === Seq(("b.com", "first link"),
-      ("b.com", "first link"), ("c.co.uk", "second")))
-    val batch = graft.llm.UrlOps.anchorPairs(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("urlCanonStage feeding watermark dedup keyed on canon_url " +
-      "keeps one fetch per resource across micro-batches") {
+  test("canonicalizeUrl then watermark dedup on canon_url keeps one " +
+      "fetch per resource") {
     import graft.streaming.StreamingDedup
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("url", StringType),
       StructField("ts", TimestampType)))
-    val dir = java.nio.file.Files.createTempDirectory("cd_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cd_ck").toString
+    val dir = TestSpark.tempDir("cd_in")
+    val ckpt = TestSpark.tempDir("cd_ck")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
     def rows(docs: (Long, String, Int)*): Unit =
       docs.toSeq.map { case (i, u, m) => (i, u, ts(m)) }
@@ -1596,7 +968,7 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "https://other.org/x", 2))
     val stream = spark.readStream.schema(docSchema).parquet(dir)
     val staged = StreamingDedup.dedupByContent(
-      StreamingDedup.urlCanonStage(stream, "url"),
+      UrlOps.canonicalizeUrl(stream, "url"),
       "canon_url", "ts")
     val q = staged.writeStream.format("memory").queryName("cd_out")
       .option("checkpointLocation", ckpt)
@@ -1616,12 +988,11 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming Count-Min counters accumulate across micro-batches " +
       "and the final state equals the batch sketch row-for-row") {
     import graft.streaming.StreamingDedup
-    import graft.llm.TextAnalysis
     val docSchema = StructType(Seq(StructField("text", StringType)))
     val batch1 = (1 to 60).map(i => s"alpha beta token$i")
     val batch2 = (30 to 90).map(i => s"alpha gamma token$i")
-    val dir = java.nio.file.Files.createTempDirectory("cms_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cms_ck").toString
+    val dir = TestSpark.tempDir("cms_in")
+    val ckpt = TestSpark.tempDir("cms_ck")
     def write(rows: Seq[String]): Unit =
       rows.toDF("text").write.mode("append").parquet(dir)
     write(batch1)
@@ -1663,92 +1034,13 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("mainContentStage equals batch mainContent across " +
-      "micro-batches; chrome stripped before downstream stages") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("page", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("mc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mc_ck").toString
-    def page(i: Long) =
-      "<a href=\"/\">home</a> <a href=\"/a\">about us</a> " +
-        "<a href=\"/c\">contact</a>\n" +
-        s"the long and unique body of crawled document number $i " +
-        "with plenty of prose\n" + "ok"
-    def rows(ids: Long*): Unit =
-      ids.toSeq.map(i => (i, page(i))).toDF("doc_id", "page")
-        .write.mode("append").parquet(dir)
-    rows(1L, 2L)
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.mainContentStage(stream, "page")
-      .select("doc_id", "n_blocks", "n_kept", "kept_ppm", "main_text")
-      .writeStream.format("memory").queryName("mc_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows(3L)
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getString(4))
-    val streamed = spark.table("mc_out").collect().map(tup).sortBy(_._1)
-    assert(streamed.length === 3)
-    // chrome and the sub-minimum fragment are gone on the live feed
-    assert(streamed.forall { case (_, nb, nk, _, main) =>
-      nb === 3L && nk === 1L && !main.contains("home") &&
-        main.startsWith("the long and unique body") })
-    val batch = graft.llm.TextAnalysis.mainContent(
-        spark.read.schema(docSchema).parquet(dir), "page")
-      .select("doc_id", "n_blocks", "n_kept", "kept_ppm", "main_text")
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("normalizeStage equals batch normalizeText across " +
-      "micro-batches; composed/decomposed spellings collide") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("nm_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("nm_ck").toString
-    def rows(rs: (Long, String)*): Unit =
-      rs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows(1L -> "Café  DU\tMONDE", 2L -> "café du monde")
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.normalizeStage(stream, "text")
-      .select("doc_id", "norm_text", "norm_changed")
-      .writeStream.format("memory").queryName("nm_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows(3L -> "already clean")
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getBoolean(2))
-    val streamed = spark.table("nm_out").collect().map(tup).sortBy(_._1)
-    assert(streamed.length === 3)
-    // the decomposed spelling folded onto the composed one live
-    assert(streamed(0)._2 === streamed(1)._2)
-    assert(streamed(0)._3 && !streamed(1)._3 && !streamed(2)._3)
-    val batch = graft.llm.TextAnalysis.normalizeText(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select("doc_id", "norm_text", "norm_changed")
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
   test("unigramStage equals batch unigramApply across micro-batches " +
       "(per-occurrence DP vs memoized distinct-word form)") {
     import graft.streaming.StreamingDedup
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("ug_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ug_ck").toString
+    val dir = TestSpark.tempDir("ug_in")
+    val ckpt = TestSpark.tempDir("ug_ck")
     def rows(rs: (Long, String)*): Unit =
       rs.toSeq.toDF("doc_id", "text")
         .write.mode("append").parquet(dir)
@@ -1786,8 +1078,8 @@ class StreamingSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("g", StringType), StructField("v", DoubleType),
       StructField("id", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("rs_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rs_ck").toString
+    val dir = TestSpark.tempDir("rs_in")
+    val ckpt = TestSpark.tempDir("rs_ck")
     def rows(rs: (String, Double, String)*): Unit =
       rs.toSeq.toDF("g", "v", "id")
         .write.mode("append").parquet(dir)
@@ -1822,205 +1114,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("robotsStage equals batch robotsGate across micro-batches; " +
-      "stream-static policy join, zero state") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("url", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("rb_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rb_ck").toString
-    val rules = Seq(
-      ("ex.com", false, "/private/"),
-      ("ex.com", true, "/private/ok/"))
-      .toDF("host", "allow", "prefix")
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "url")
-        .write.mode("append").parquet(dir)
-    rows((1L, "https://ex.com/private/a"),
-      (2L, "https://ex.com/private/ok/x"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.robotsStage(stream, "url", rules)
-      .select("doc_id", "allowed", "matched_rule", "matched_len")
-      .writeStream.format("memory").queryName("rb_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "https://other.net/private/a"))
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getBoolean(1), r.getString(2), r.getLong(3))
-    val streamed = spark.table("rb_out").collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === Seq(
-      (1L, false, "/private/", 9L),
-      (2L, true, "/private/ok/", 12L),
-      (3L, true, "", 0L)))
-    val batch = graft.llm.UrlOps.robotsGate(
-        spark.read.schema(docSchema).parquet(dir), "url", rules)
-      .select("doc_id", "allowed", "matched_rule", "matched_len")
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming FIM stage equals the batch split; a late arrival " +
-      "gets the same deterministic cuts") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("fim_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("fim_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "short doc"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.fimStage(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("fim_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "a late document must split exactly like the batch " +
-      "pipeline would split it"))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "fim_mode", "prefix", "middle", "suffix")
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getString(4))
-    val streamed = spark.table("fim_out")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    // non-raw rows reassemble; the short doc passes through raw
-    assert(streamed(0)._3 + streamed(0)._4 + streamed(0)._5 ===
-      "the quick brown fox jumps over the lazy dog tonight")
-    assert((streamed(1)._2, streamed(1)._3) === (("raw", "short doc")))
-    val batch = graft.llm.TextAnalysis.fimSplit(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming mojibake stage equals the batch repair; a late " +
-      "arrival gets the identical fix count") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("mj_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mj_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "cafÃ© itâ€™s fine"), (2L, "clean"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.mojibakeStage(stream, "text")
-      .writeStream.format("memory").queryName("mj_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "late â€œquotedâ€¦ Ã±"))
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2))
-    val cols = Seq("doc_id", "fixed_text", "n_fixes")
-    val streamed = spark.table("mj_out")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === Seq(
-      (1L, "café it’s fine", 2L),
-      (2L, "clean", 0L),
-      (3L, "late “quoted… ñ", 3L)))
-    val batch = graft.llm.TextAnalysis.mojibakeFix(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming burstiness stage equals the batch signals on a " +
-      "late arrival") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("ss_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ss_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "one two three. four five six."), (2L, "no breaks"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.syntheticStage(stream, "text")
-      .writeStream.format("memory").queryName("ss_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "a b c d e f. g h."))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "n_sent", "sum_len", "sum_len2",
-      "burstiness_ppm")
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))
-    val streamed = spark.table("ss_out")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === Seq(
-      (1L, 2L, 6L, 18L, 0L),
-      (2L, 1L, 2L, 4L, 0L),
-      (3L, 2L, 8L, 40L, 250000L)))
-    val batch = graft.llm.TextAnalysis.syntheticSignals(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
-  test("streaming homoglyph-fold stage equals the batch fold; an " +
-      "obfuscated late duplicate hashes onto its original") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("cf_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cf_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "buy cheap pills"), (2L, "plain"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.confusableStage(stream, "text")
-      .select(col("doc_id"), col("folded_text"), col("n_folded"),
-        graft.llm.TextAnalysis.fingerprintExpr("folded_text")
-          .as("fp"))
-      .writeStream.format("memory").queryName("cf_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "buy chеap pіlls")) // Cyrillic е/і — the late spam twin
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
-    val streamed = spark.table("cf_out").collect().map(tup)
-      .sortBy(_._1)
-    assert(streamed.map(t => (t._1, t._2, t._3)).toSeq === Seq(
-      (1L, "buy cheap pills", 0L),
-      (2L, "plain", 0L),
-      (3L, "buy cheap pills", 2L)))
-    // the folded fingerprints collide exactly as the batch dedup
-    // would see them
-    assert(streamed(0)._4 === streamed(2)._4)
-    val batch = StreamingDedup.confusableStage(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select(col("doc_id"), col("folded_text"), col("n_folded"),
-        graft.llm.TextAnalysis.fingerprintExpr("folded_text")
-          .as("fp"))
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-  }
-
   test("streaming position-bias counters merge across micro-batches " +
       "and the final audit row equals the batch operator to the bit") {
     import graft.streaming.StreamingDedup
@@ -2040,8 +1133,8 @@ class StreamingSpec extends AnyFunSuite {
         ("jb", Some(i <= 51): Option[Boolean])) ++
       (1 to 60).map(i => ("jok", Some(i <= 30): Option[Boolean])) ++
       Seq(("jok", None: Option[Boolean]))
-    val dir = java.nio.file.Files.createTempDirectory("pb_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("pb_ck").toString
+    val dir = TestSpark.tempDir("pb_in")
+    val ckpt = TestSpark.tempDir("pb_ck")
     def write(rows: Seq[(String, Option[Boolean])]): Unit =
       rows.toDF("judge", "aw").write.mode("append").parquet(dir)
     write(batch1)
@@ -2112,8 +1205,8 @@ class StreamingSpec extends AnyFunSuite {
       ("B", "C", Some(3L), Some(2L)),
       ("B", "C", Some(8L), Some(2L)),
       ("B", "C", Some(5L), Some(2L)))
-    val dir = java.nio.file.Files.createTempDirectory("st_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("st_ck").toString
+    val dir = TestSpark.tempDir("st_in")
+    val ckpt = TestSpark.tempDir("st_ck")
     def write(
         rows: Seq[(String, String, Option[Long], Option[Long])])
         : Unit =
@@ -2185,8 +1278,8 @@ class StreamingSpec extends AnyFunSuite {
     // batch 2 re-delivers (0, 10) at a worse rank (collapses to the
     // best) and fills the rest of query 0's shortlist
     val batch2 = Seq((0L, 11L, 2L), (0L, 12L, 3L), (0L, 10L, 3L))
-    val dir = java.nio.file.Files.createTempDirectory("re_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("re_ck").toString
+    val dir = TestSpark.tempDir("re_in")
+    val ckpt = TestSpark.tempDir("re_ck")
     def write(rows: Seq[(Long, Long, Long)]): Unit =
       rows.toDF("query_id", "doc_id", "rank")
         .write.mode("append").parquet(dir)
@@ -2239,8 +1332,7 @@ class StreamingSpec extends AnyFunSuite {
     // knownQueriesOnly bounds state by the MODEL's query set: the
     // no-qrels query 1 is dropped at the stage front (trading away
     // its NULL-metric row for a state bound an untrusted feed needs)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("re_ck2")
-      .toString
+    val ckpt2 = TestSpark.tempDir("re_ck2")
     @volatile var known = Map.empty[Long,
       StreamingDedup.RetrievalEvalRow]
     val q2 = StreamingDedup.retrievalEvalStage(
@@ -2258,5 +1350,411 @@ class StreamingSpec extends AnyFunSuite {
     q2.processAllAvailable()
     q2.stop()
     assert(known.contains(0L) && !known.contains(1L))
+  }
+
+  // ---- stream = batch: row-local batch operators on a stream as-is ----
+
+  /** One row-local batch operator applied to a stream unchanged.
+    * `first` and `second` arrive as two micro-batches of a
+    * MemoryStream; the memory-sink output of `op` must equal `op` on
+    * all rows as one batch frame, every column, row for row. `check`
+    * then pins the operator's own figures, given the batch input and
+    * the streamed rows.
+    */
+  private case class Parity(name: String, schema: StructType,
+      first: Seq[Row], second: Seq[Row], op: DataFrame => DataFrame,
+      check: (DataFrame, Seq[Row]) => Unit = (_, _) => ())
+
+  private val docCols = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+  private val urlCols = StructType(Seq(
+    StructField("doc_id", LongType), StructField("url", StringType)))
+  private def rowsOf(docs: (Long, String)*): Seq[Row] =
+    docs.map { case (i, t) => Row(i, t) }
+  private def ids(rows: Seq[Row]): Seq[Long] =
+    rows.map(_.getAs[Long]("doc_id")).sorted
+  private def byId(rows: Seq[Row]): Map[Long, Row] =
+    rows.map(r => r.getAs[Long]("doc_id") -> r).toMap
+
+  // fitted artifacts the scoring operators take, fit offline once
+  private lazy val evalBloom = Dedup.decontamBloom(
+    Seq((100L, "the quick brown fox jumps over the lazy dog tonight"))
+      .toDF("doc_id", "text"), "text")
+  private lazy val dsirModel = TextAnalysis.dsirFit(Seq(
+      (101L, "t", "retail units sold per store and week"),
+      (102L, "t", "weekly retail demand by region"),
+      (103L, "r", "entirely unrelated vocabulary here"),
+      (104L, "r", "other raw crawl content words"))
+    .toDF("doc_id", "source", "text"), "text", "doc_id", "source", "t")
+  private lazy val bm25Model = TextAnalysis.bm25Fit(Seq(
+      (101L, "alpha alpha beta gamma words"),
+      (102L, "alpha beta beta beta words"),
+      (103L, "gamma delta epsilon zeta words"))
+    .toDF("doc_id", "text"), "text")
+  private lazy val robotsRules = Seq(
+      ("ex.com", false, "/private/"), ("ex.com", true, "/private/ok/"))
+    .toDF("host", "allow", "prefix")
+  private val licenseMarkers = Seq(
+    "mit" -> "permission is hereby granted",
+    "gpl" -> "gnu general public license")
+
+  private val audioCodecs
+      : Seq[(String, (DataFrame, String, String) => DataFrame)] = Seq(
+    "Multimodal.ulawPipeline" -> Multimodal.ulawPipeline,
+    "Multimodal.adpcmPipeline" -> Multimodal.adpcmPipeline,
+    "Multimodal.mdctPipeline" -> Multimodal.mdctPipeline)
+  private val imageCodecs
+      : Seq[(String, (DataFrame, String, String) => DataFrame)] = Seq(
+    "Multimodal.pngPipeline" -> Multimodal.pngPipeline,
+    "Multimodal.gifPipeline" -> Multimodal.gifPipeline,
+    "Multimodal.mcvPipeline" -> Multimodal.mcvPipeline)
+
+  private val span25 = (1 to 25).map(i => s"w$i").mkString(" ")
+  private val nearDup =
+    "spark engines shuffle partitions and broadcast small tables"
+  private def page(i: Long) =
+    "<a href=\"/\">home</a> <a href=\"/a\">about us</a> " +
+      "<a href=\"/c\">contact</a>\n" +
+      s"the long and unique body of crawled document number $i " +
+      "with plenty of prose\n" + "ok"
+
+  private val parityTable: Seq[Parity] = Seq(
+    Parity("Dedup.spanGrams", docCols,
+      rowsOf(1L -> span25),
+      rowsOf(2L -> (span25 + " trailing extras beyond the shared run")),
+      Dedup.spanGrams(_, "text", "doc_id"),
+      (_, rows) => {
+        // the shared 25-token span: doc 2's first 6 window grams
+        // equal doc 1's (20-token windows)
+        def grams(d: Long) = rows.filter(_.getAs[Long]("doc_id") == d)
+          .map(r => r.getAs[Long]("win_start") -> r.getAs[Long]("gram"))
+          .toMap
+        assert((1L to 6L).forall(ws => grams(1L)(ws) == grams(2L)(ws)))
+      }),
+    Parity("Dedup.lshBuckets of minhashSignatures", docCols,
+      rowsOf(1L -> nearDup, 2L ->
+        "an entirely different document about pasta and tomato sauce"),
+      rowsOf(3L -> nearDup.replace("small", "tiny")),
+      df => Dedup.lshBuckets(
+        Dedup.minhashSignatures(df, "text", "doc_id"), "doc_id"),
+      (_, rows) => {
+        // the near-duplicates 1 and 3 share a (band, band_key) bucket
+        val buckets = rows.groupBy(r =>
+            (r.getAs[Int]("band"), r.getAs[Long]("band_key")))
+          .values.map(_.map(_.getAs[Long]("doc_id")).toSet)
+        assert(buckets.exists(b => b(1L) && b(3L)))
+      }),
+    Parity("TextAnalysis.withLrGate", docCols,
+      rowsOf(1L -> "retail units sold per store and week in region",
+        2L -> "   ", // zero content tokens: dropped by the gate
+        3L -> "plainly different vocabulary drives a different score"),
+      rowsOf(4L -> "second micro batch arrives with more retail text"),
+      TextAnalysis.withLrGate(_, "text"),
+      (in, rows) => {
+        assert(ids(rows) === Seq(1L, 3L, 4L))
+        // the scores are the id-keyed batch gate's
+        val gate = TextAnalysis.lrQualityGate(in, "text", "doc_id")
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(rows.forall(r =>
+          gate(r.getAs[Long]("doc_id")) == r.getAs[Double]("lr_score")))
+      })) ++
+  audioCodecs.map { case (name, pipeline) =>
+    Parity(name, docCols,
+      rowsOf(1L -> "retail units sold per store and week",
+        2L -> "zz" * 40),
+      rowsOf(3L -> "a third doc arrives"),
+      pipeline(_, "text", "doc_id"),
+      (_, rows) => assert(rows.forall(_.getAs[Boolean]("roundtrip_ok"))))
+  } ++
+  imageCodecs.map { case (name, pipeline) =>
+    Parity(name, docCols,
+      rowsOf(1L -> "retail units sold per store and week in region nine"),
+      rowsOf(2L -> "zq" * 400),
+      pipeline(_, "text", "doc_id"),
+      (_, rows) => {
+        assert(ids(rows) === Seq(1L, 2L))
+        assert(rows.forall(_.getAs[Boolean]("roundtrip_ok")))
+      })
+  } ++ Seq(
+    // a stateless flatMap: 4 patch rows per record
+    Parity("Multimodal.patchifyPipeline", docCols,
+      rowsOf(1L -> "retail units sold per store and week in region nine"),
+      rowsOf(2L -> "zq" * 400),
+      Multimodal.patchifyPipeline(_, "text", "doc_id"),
+      (_, rows) => assert(rows.length === 8)),
+    // hash gates, not RNG: a retried micro-batch replays identically
+    Parity("TextAnalysis.augmentTokens", docCols,
+      rowsOf(1L -> "retail units sold per store and week in region nine",
+        2L -> "a b c d e f g h i j k l m n o p"),
+      rowsOf(3L -> "late arrival gets the same deterministic gates"),
+      TextAnalysis.augmentTokens(_, "text", "doc_id"),
+      (_, rows) => assert(ids(rows) === Seq(1L, 2L, 3L))),
+    Parity("TextAnalysis.withDocRepetition", docCols,
+      rowsOf(1L -> "x y\nx y\nz", 2L -> "ab ab ab cd"),
+      rowsOf(3L -> "one two\none two\none two"),
+      TextAnalysis.withDocRepetition(_, "text"),
+      (in, rows) => {
+        // doc 3: 3 lines, 2 duplicated
+        assert(byId(rows)(3L).getAs[Long]("dup_line_ppm") === 666666L)
+        // the row-local form equals the explode-and-aggregate form
+        def sig(rs: Seq[Row]) = rs.map(r => (r.getAs[Long]("doc_id"),
+          r.getAs[Long]("dup_line_ppm"), r.getAs[Long]("top2_ppm")))
+          .sorted
+        assert(sig(rows) === sig(TextAnalysis.docRepetition(in, "text",
+          "doc_id").collect().toSeq))
+      }),
+    Parity("TextAnalysis.withCharEntropy", docCols,
+      rowsOf(1L -> "abab", 2L -> ""),
+      rowsOf(3L -> "aaaa", 4L -> "templated templated text"),
+      TextAnalysis.withCharEntropy(_, "text"),
+      (in, rows) => {
+        val s = byId(rows)
+        // ab, ba, ab: ln 3 - (2 ln 2) / 3
+        assert(s(1L).getAs[Long]("n_bigrams") === 3L)
+        assert(s(1L).getAs[Double]("entropy") === 0.636514)
+        assert(s(3L).getAs[Double]("entropy") === 0.0)
+        // the row-local form equals the doc-keyed batch form
+        def sig(rs: Seq[Row]) = rs.map(r => (r.getAs[Long]("doc_id"),
+          r.getAs[Long]("n_bigrams"), r.getAs[Double]("entropy"))).sorted
+        assert(sig(rows) === sig(TextAnalysis.charEntropy(in, "text",
+          "doc_id").collect().toSeq))
+      }),
+    Parity("Dedup.withContaminationFlag", docCols,
+      rowsOf(1L -> ("see the quick brown fox jumps over the lazy dog " +
+          "tonight again"),
+        2L -> "unrelated clean retail content with distinct words"),
+      rowsOf(3L -> ("second batch also mentions the quick brown fox " +
+        "jumps over the lazy dog tonight")),
+      Dedup.withContaminationFlag(_, "text", evalBloom),
+      (_, rows) => assert(ids(rows).map(byId(rows)(_)
+        .getAs[Boolean]("contaminated")) === Seq(true, false, true))),
+    Parity("TextAnalysis.withDsirScore", docCols,
+      rowsOf(1L -> "retail units sold per store",
+        2L -> "   ", // zero content tokens: dropped
+        3L -> "unrelated vocabulary here"),
+      rowsOf(4L -> "second micro batch with more retail units text"),
+      TextAnalysis.withDsirScore(_, "text", dsirModel),
+      (_, rows) => {
+        assert(ids(rows) === Seq(1L, 3L, 4L))
+        // the target-typical doc outscores the raw-typical one
+        val s = byId(rows).map { case (i, r) =>
+          i -> r.getAs[Double]("dsir_score") }
+        assert(s(1L) > s(3L))
+      }),
+    Parity("TextAnalysis.withBm25Score", docCols,
+      rowsOf(1L -> "alpha beta fresh words", 2L -> "",
+        3L -> "no query terms at all"),
+      rowsOf(4L -> "second batch alpha alpha alpha"),
+      TextAnalysis.withBm25Score(_, "text", bm25Model),
+      (_, rows) => {
+        // every row rides through, the empty doc included
+        assert(ids(rows) === Seq(1L, 2L, 3L, 4L))
+        val s = byId(rows).map { case (i, r) =>
+          i -> ((r.getAs[Long]("bm25_micro"), r.getAs[Long]("bm25_hits")))
+        }
+        assert(s(2L) === ((0L, 0L)) && s(3L) === ((0L, 0L)))
+        assert(s(4L)._1 > s(1L)._1) // tf saturation still orders
+      }),
+    Parity("TextAnalysis.licenseScan", docCols,
+      rowsOf(1L -> "code under permission is hereby granted terms",
+        2L -> "plain document, no license"),
+      rowsOf(3L -> ("dual permission is hereby granted and " +
+        "gnu general public license")),
+      TextAnalysis.licenseScan(_, "text", "doc_id", licenseMarkers),
+      (_, rows) => assert(ids(rows).map(byId(rows)(_)).map(r =>
+          (r.getAs[Long]("doc_id"), r.getAs[String]("license"),
+            r.getAs[Boolean]("copyleft_gate"))) === Seq(
+        (1L, "mit", false), (2L, "unknown", false), (3L, "gpl", true)))),
+    Parity("TextAnalysis.withLangId", docCols,
+      rowsOf(1L -> "where did you put the keys to the old car",
+        2L -> "los estudiantes estaban leyendo en el jardin"),
+      rowsOf(3L -> "les oiseaux chantent dans le jardin"),
+      TextAnalysis.withLangId(_, "text"),
+      (_, rows) => assert(ids(rows).map(byId(rows)(_)
+        .getAs[String]("pred_lang")) === Seq("en", "es", "fr"))),
+    Parity("UrlOps.withUrlParts", urlCols,
+      rowsOf(1L -> "https://a.b.Example.co.uk:8080/p",
+        2L -> "http://user:pw@www.Site.COM/x"),
+      rowsOf(3L -> "ftp://10.0.0.1:21/f"),
+      UrlOps.withUrlParts(_, "url"),
+      (_, rows) => {
+        val s = byId(rows)
+        assert(s(1L).getAs[String]("host") === "a.b.example.co.uk")
+        assert(s(1L).getAs[Long]("port") === 8080L)
+        assert(s(1L).getAs[String]("registered_domain") ===
+          "example.co.uk")
+        assert(s(3L).getAs[Boolean]("is_ip"))
+      }),
+    Parity("UrlOps.canonicalizeUrl", urlCols,
+      rowsOf(1L -> "https://WWW.Shop.Com:443/p/1/?utm_source=x&id=1#f",
+        2L -> "https://www.shop.com/p/1?id=1"),
+      rowsOf(3L -> "http://other.org:8080/x?b=2&a=1&gclid=g"),
+      UrlOps.canonicalizeUrl(_, "url"),
+      (_, rows) => {
+        val s = byId(rows).map { case (i, r) => i ->
+          ((r.getAs[String]("canon_url"), r.getAs[Long]("n_params_dropped")))
+        }
+        // two surface forms of one resource collide
+        assert(s(1L) === (("https://www.shop.com/p/1?id=1", 1L)))
+        assert(s(2L) === (("https://www.shop.com/p/1?id=1", 0L)))
+        // non-default port kept, params sorted, tracking key dropped
+        assert(s(3L)._1 === "http://other.org:8080/x?a=1&b=2")
+      }),
+    Parity("TextAnalysis.withShard", docCols,
+      rowsOf(1L -> "some body text for doc one",
+        2L -> "a different and rather longer body text for doc two"),
+      rowsOf(3L -> "third doc body"),
+      TextAnalysis.withShard(_, "text", "doc_id", nShards = 8),
+      (_, rows) => assert(rows.forall { r =>
+        val s = r.getAs[Long]("shard"); s >= 0L && s < 8L })),
+    Parity("UrlOps.anchorPairs",
+      StructType(Seq(StructField("text", StringType))),
+      Seq(Row("x <a href=\"https://a.b.com/1\">First Link</a> y\n" +
+        "  <a href=\"http://c.co.uk/2\">second</a>")),
+      Seq(Row("<a href=\"https://z.b.com/3\">first link</a> plain")),
+      UrlOps.anchorPairs(_, "text"),
+      (_, rows) => {
+        // c.co.uk sits under the co.uk multi-part suffix: the
+        // registrable domain keeps three labels
+        assert(rows.map(r => (r.getString(0), r.getString(1))).sorted ===
+          Seq(("b.com", "first link"), ("b.com", "first link"),
+            ("c.co.uk", "second")))
+      }),
+    Parity("TextAnalysis.mainContent",
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("page", StringType))),
+      Seq(Row(1L, page(1L)), Row(2L, page(2L))), Seq(Row(3L, page(3L))),
+      TextAnalysis.mainContent(_, "page"),
+      (_, rows) => {
+        assert(rows.length === 3)
+        // the link chrome and the sub-minimum fragment are gone
+        assert(rows.forall { r =>
+          val main = r.getAs[String]("main_text")
+          r.getAs[Long]("n_blocks") === 3L &&
+            r.getAs[Long]("n_kept") === 1L && !main.contains("home") &&
+            main.startsWith("the long and unique body")
+        })
+      }),
+    Parity("TextAnalysis.normalizeText", docCols,
+      // doc 1 spells e-acute decomposed (e + U+0301), doc 2 composed
+      rowsOf(1L -> "Cafe\u0301  DU\tMONDE", 2L -> "caf\u00e9 du monde"),
+      rowsOf(3L -> "already clean"),
+      TextAnalysis.normalizeText(_, "text"),
+      (_, rows) => {
+        val s = byId(rows)
+        assert(s(1L).getAs[String]("norm_text") ===
+          s(2L).getAs[String]("norm_text"))
+        assert(ids(rows).map(s(_).getAs[Boolean]("norm_changed")) ===
+          Seq(true, false, false))
+      }),
+    // a stream-static join against the policy table
+    Parity("UrlOps.robotsGate", urlCols,
+      rowsOf(1L -> "https://ex.com/private/a",
+        2L -> "https://ex.com/private/ok/x"),
+      rowsOf(3L -> "https://other.net/private/a"),
+      UrlOps.robotsGate(_, "url", robotsRules),
+      (_, rows) => assert(ids(rows).map(byId(rows)(_)).map(r =>
+          (r.getAs[Long]("doc_id"), r.getAs[Boolean]("allowed"),
+            r.getAs[String]("matched_rule"),
+            r.getAs[Long]("matched_len"))) === Seq(
+        (1L, false, "/private/", 9L),
+        (2L, true, "/private/ok/", 12L),
+        (3L, true, "", 0L)))),
+    Parity("TextAnalysis.fimSplit", docCols,
+      rowsOf(1L -> "the quick brown fox jumps over the lazy dog tonight",
+        2L -> "short doc"),
+      rowsOf(3L -> ("a late document must split exactly like the " +
+        "batch pipeline would split it")),
+      TextAnalysis.fimSplit(_, "text", "doc_id"),
+      (_, rows) => {
+        val s = byId(rows)
+        def part(i: Long, c: String) = s(i).getAs[String](c)
+        // a split row reassembles; the short doc passes through raw
+        assert(part(1L, "prefix") + part(1L, "middle") +
+          part(1L, "suffix") ===
+          "the quick brown fox jumps over the lazy dog tonight")
+        assert((part(2L, "fim_mode"), part(2L, "prefix")) ===
+          (("raw", "short doc")))
+      }),
+    Parity("TextAnalysis.mojibakeFix", docCols,
+      rowsOf(1L -> "caf\u00c3\u00a9 it\u00e2\u20ac\u2122s fine",
+        2L -> "clean"),
+      rowsOf(3L -> ("late \u00e2\u20ac\u0153quoted\u00e2\u20ac\u00a6 " +
+        "\u00c3\u00b1")),
+      TextAnalysis.mojibakeFix(_, "text"),
+      (_, rows) => assert(ids(rows).map(byId(rows)(_)).map(r =>
+          (r.getAs[Long]("doc_id"), r.getAs[String]("fixed_text"),
+            r.getAs[Long]("n_fixes"))) === Seq(
+        (1L, "caf\u00e9 it\u2019s fine", 2L),
+        (2L, "clean", 0L),
+        (3L, "late \u201cquoted\u2026 \u00f1", 3L)))),
+    Parity("TextAnalysis.syntheticSignals", docCols,
+      rowsOf(1L -> "one two three. four five six.", 2L -> "no breaks"),
+      rowsOf(3L -> "a b c d e f. g h."),
+      TextAnalysis.syntheticSignals(_, "text"),
+      (_, rows) => assert(ids(rows).map(byId(rows)(_)).map(r =>
+          (r.getAs[Long]("doc_id"), r.getAs[Long]("n_sent"),
+            r.getAs[Long]("sum_len"), r.getAs[Long]("sum_len2"),
+            r.getAs[Long]("burstiness_ppm"))) === Seq(
+        (1L, 2L, 6L, 18L, 0L),
+        (2L, 1L, 2L, 4L, 0L),
+        (3L, 2L, 8L, 40L, 250000L)))),
+    Parity("TextAnalysis.confusableFold", docCols,
+      rowsOf(1L -> "buy cheap pills", 2L -> "plain"),
+      // Cyrillic U+0435 and U+0456: the late spam twin of doc 1
+      rowsOf(3L -> "buy ch\u0435ap p\u0456lls"),
+      df => TextAnalysis.confusableFold(df, "text")
+        .withColumn("fp", TextAnalysis.fingerprintExpr("folded_text")),
+      (_, rows) => {
+        val s = byId(rows)
+        assert(ids(rows).map(i => (i, s(i).getAs[String]("folded_text"),
+          s(i).getAs[Long]("n_folded"))) === Seq(
+          (1L, "buy cheap pills", 0L), (2L, "plain", 0L),
+          (3L, "buy cheap pills", 2L)))
+        // the folded twin fingerprints onto its original
+        assert(s(1L).get(s(1L).fieldIndex("fp")) ===
+          s(3L).get(s(3L).fieldIndex("fp")))
+      }),
+    Parity("TextAnalysis.scriptMix", docCols,
+      // doc 2 hides two Cyrillic a (U+0430) in Latin words
+      rowsOf(1L -> "plain latin words", 2L -> "p\u0430yp\u0430l login"),
+      rowsOf(3L -> "\u043c\u0438\u0440 peace", 4L -> "12345 !!"),
+      TextAnalysis.scriptMix(_, "text"),
+      (_, rows) => {
+        val s = byId(rows)
+        def n(i: Long, c: String) = s(i).getAs[Long](c)
+        assert(n(1L, "mixed_ppm") === 0L)
+        assert((n(2L, "n_letters"), n(2L, "n_cyrillic")) === ((11L, 2L)))
+        assert(n(2L, "mixed_ppm") === 2L * 1000000L / 11L)
+        // 3 Cyrillic vs 5 Latin letters: the Cyrillic are the minority
+        assert(n(3L, "mixed_ppm") === 3L * 1000000L / 8L)
+        assert(s(4L).isNullAt(s(4L).fieldIndex("mixed_ppm")))
+      }))
+
+  /** Output rows as values in one canonical order. */
+  private def canonical(rows: Seq[Row]): Seq[Seq[Any]] =
+    rows.map(_.toSeq).sortBy(_.toString)
+
+  parityTable.foreach { p =>
+    test(s"stream = batch: ${p.name}") {
+      val in = MemoryStream[Row](Encoders.row(p.schema), spark)
+      val sink = "parity_" + p.name.replaceAll("\\W", "_")
+      val q = p.op(in.toDF()).writeStream.format("memory")
+        .queryName(sink)
+        .option("checkpointLocation", TestSpark.tempDir("parity_ck"))
+        .outputMode("append").start()
+      try {
+        in.addData(p.first)
+        q.processAllAvailable()
+        in.addData(p.second)
+        q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.table(sink).collect().toSeq
+      val all = spark.createDataFrame((p.first ++ p.second).asJava,
+        p.schema)
+      assert(streamed.nonEmpty)
+      assert(canonical(streamed) === canonical(p.op(all).collect().toSeq))
+      p.check(all, streamed)
+    }
   }
 }
